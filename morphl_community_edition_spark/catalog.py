@@ -9,7 +9,7 @@ scan and a correctness hazard.
 
 ``events.parquet`` has shipped with two different ``ts`` encodings
 across testdata generations, so the catalog sniffs the parquet footer
-(one driver-side metadata read, memoized) and adapts:
+(one driver-side metadata read per table plan) and adapts:
 
 - ``TIMESTAMP(NANOS)``: pyspark 4.x cannot read it by default
   (PARQUET_TYPE_ILLEGAL). With
@@ -29,13 +29,12 @@ across testdata generations, so the catalog sniffs the parquet footer
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from morphl_community_edition_spark.session import apply_runtime_conf
+from morphl_community_edition_spark.session import apply_runtime_conf, invalidate, memo
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -158,41 +157,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-def index_root(spark: SparkSession) -> str:
-    """Root directory for PERSISTED index artifacts (the q134 dedup
-    postings, q150 ANN cells, q151 BM25 buckets). Resolution order:
-    ``SPARK_GRAFT_INDEX_ROOT`` env var → ``spark.morphl.indexRoot``
-    session conf → the local temp dir. Local mode works out of the
-    box; a CLUSTER deployment must point this at shared storage —
-    an unqualified /tmp resolves per-machine, so executors and the
-    driver would write/read disjoint local directories and the
-    build→serve chain silently breaks (round-9 advice)."""
-    root = os.environ.get("SPARK_GRAFT_INDEX_ROOT")
-    if not root:
-        root = spark.conf.get("spark.morphl.indexRoot", None)
-    if not root:
-        import tempfile
-
-        root = tempfile.gettempdir()
-    return root
-
-
-# path -> whether events.ts is INT64 TIMESTAMP(NANOS) (or a bare int64,
-# which historic generators used for epoch-ns). One footer read per
-# path for the life of the process — parquet fixtures are immutable.
-_EVENTS_TS_NANOS_MEMO: dict[str, bool] = {}
-
-
 def _events_ts_is_nanos(path: str) -> bool:
     """Sniff the parquet footer: does ``ts`` need the ns→µs repair?
 
-    Driver-side metadata-only read (no row data). Handles both a single
-    parquet file and a directory of part files (sniffs the first part —
-    a writer never mixes units within one dataset).
-    """
-    cached = _EVENTS_TS_NANOS_MEMO.get(path)
-    if cached is not None:
-        return cached
+    Driver-side metadata-only read (no row data), paid once per table
+    plan build — load_table's registry memo covers the reuse. Handles
+    both a single parquet file and a directory of part files (sniffs
+    the first part — a writer never mixes units within one dataset).
+    A bare int64 ``ts`` is the legacy epoch-ns encoding."""
     import pyarrow.parquet as pq
 
     probe = path
@@ -205,31 +177,10 @@ def _events_ts_is_nanos(path: str) -> bool:
         if not parts:
             raise FileNotFoundError(f"no parquet part files under {path}")
         probe = parts[0]
-    field = pq.read_schema(probe).field("ts")
-    ftype = field.type
-    if hasattr(ftype, "unit"):  # a timestamp logical type
-        is_ns = ftype.unit == "ns"
-    else:
-        # bare int64: the legacy epoch-ns encoding (SURVEY.md §5.3.3)
-        is_ns = True
-    _EVENTS_TS_NANOS_MEMO[path] = is_ns
-    return is_ns
-
-
-# session -> {(sf_dir, name) -> DataFrame}. A DataFrame is an immutable
-# logical plan, so reuse is safe; this skips the repeated file-listing/
-# footer read when a 56-query sweep loads the same table dozens of
-# times. Keyed WEAKLY by the live session object — an id()-based key
-# could serve a stopped session's plans to a new session allocated at
-# the recycled address, and would never evict.
-_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = None  # type: ignore[assignment]
-
-
-def _memo_for(spark: SparkSession) -> dict:
-    global _TABLE_MEMO
-    if _TABLE_MEMO is None:
-        _TABLE_MEMO = weakref.WeakKeyDictionary()
-    return _TABLE_MEMO.setdefault(spark, {})
+    ftype = pq.read_schema(probe).field("ts").type
+    # a timestamp logical type carries its unit; bare int64 is epoch-ns
+    # (SURVEY.md §5.3.3)
+    return ftype.unit == "ns" if hasattr(ftype, "unit") else True
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -239,13 +190,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet footer: ns files are read as long (nanosAsLong) and
     repaired to a µs TimestampType (floor-truncated — matching DuckDB's
     ns→µs cast); µs/ms files are read natively as TimestampType.
-    """
+
+    The plan is memoized per (session, sf_dir, name) in the session
+    registry: a DataFrame is an immutable logical plan, so reuse is
+    safe, and a 56-query sweep skips the repeated file listing and
+    footer read. ``invalidate_tables`` drops it after a rewrite."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    memo = _memo_for(spark)
-    cached = memo.get((sf_dir, name))
-    if cached is not None:
-        return cached
+    return memo(
+        spark, "catalog.table", name, lambda: _read_table(spark, sf_dir, name), sf_dir=sf_dir
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_conf(spark)
     path = table_path(sf_dir, name)
     schema = SCHEMAS[name]
@@ -259,7 +216,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.schema(schema).parquet(path)
     if repair_ns:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    memo[(sf_dir, name)] = df
     return df
 
 
@@ -273,9 +229,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-_VIEW_MEMO: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = None  # type: ignore[assignment]
 
 
 def view_suffix(sf_dir: str) -> str:
@@ -297,111 +250,30 @@ def ensure_views(spark: SparkSession, sf_dir: str) -> str:
     PER OPERATOR (~65 ms/rebuild measured at q01's width), where one
     ``spark.sql(text)`` over pre-registered views costs one round trip
     total (~21 ms). Registration itself happens once per (session,
-    sf_dir) — the memo is weakly keyed by the live session object,
-    exactly like the table memo above, so a recycled session address
-    can never inherit stale views and a fresh session re-registers on
-    first use."""
-    global _VIEW_MEMO
-    if _VIEW_MEMO is None:
-        _VIEW_MEMO = weakref.WeakKeyDictionary()
-    done = _VIEW_MEMO.setdefault(spark, set())
+    sf_dir), memoized in the session registry like the table plans, so
+    a fresh session re-registers on first use."""
     sfx = view_suffix(sf_dir)
-    if sf_dir not in done:
+
+    def _register() -> str:
         for name in TABLES:
             load_table(spark, sf_dir, name).createOrReplaceTempView(f"{name}_{sfx}")
-        done.add(sf_dir)
-    return sfx
+        return sfx
+
+    return memo(spark, "catalog.views", None, _register, sf_dir=sf_dir)
 
 
-def invalidate_tables(spark: SparkSession, sf_dir: str | None = None) -> int:
-    """Drop memoized table plans for one ``sf_dir`` (or all), refresh
-    Spark's cached file listings for those paths, and force temp-view
-    re-registration — the escape hatch for files REWRITTEN in-process.
+def invalidate_tables(spark: SparkSession, sf_dir: str) -> int:
+    """Forget everything this session derived from the files under
+    ``sf_dir`` — the escape hatch for files REWRITTEN in-process
+    (``Engine.prepare(...).refresh()`` routes through here).
 
-    The table/view memos assume fixture immutability within a process
-    (documented above); ``Engine.prepare(...).refresh()`` routes
-    through here so its re-plan contract actually holds when a source
-    path was overwritten. Also drops the per-file events ts-unit
-    verdicts (a rewrite can flip ns ↔ µs) and the staged stream-input
-    dirs (sources/stream — they snapshot table content). Returns the
-    number of dropped table plans. Remaining caveat: the fan-out
-    gate's partition-count memo (plans/hints) keys on the semantic
-    plan, which is identical for a re-read of the same path — its
-    verdict can be stale if a rewrite changed the FILE COUNT
-    (documented there; harmless for row updates)."""
-    memo = _memo_for(spark)
-    victims = [k for k in list(memo) if sf_dir is None or k[0] == sf_dir]
-    for k in victims:
-        del memo[k]
-        try:
-            spark.catalog.refreshByPath(table_path(k[0], k[1]))
-        except Exception:  # noqa: BLE001 — refresh is best-effort
-            pass
-    global _VIEW_MEMO
-    if _VIEW_MEMO is not None:
-        done = _VIEW_MEMO.get(spark)
-        if done is not None:
-            if sf_dir is None:
-                done.clear()
-            else:
-                done.discard(sf_dir)
-    # events ts-unit verdicts are keyed by file path and process-wide;
-    # a rewrite can flip the unit (ns ↔ µs), so they must drop with
-    # the table plans (round-6 review finding)
-    for p in list(_EVENTS_TS_NANOS_MEMO):
-        if sf_dir is None or p.startswith(sf_dir):
-            del _EVENTS_TS_NANOS_MEMO[p]
-    # corpus row-count memos are result-affecting for fractional
-    # df-valves (a valve threshold resolved from a stale count changes
-    # which shingles are cut — round-7 advice): the doc-count memo is
-    # sf_dir-keyed and drops surgically; the semanticHash-keyed valve
-    # memo cannot be mapped back to a path, so it drops entirely for
-    # this session (cost: one re-count per valved query after an
-    # explicit invalidation — correct beats memoized here)
-    # NOT wrapped in a broad except (round-7 review): a swallowed
-    # failure here would silently leave the stale count in place —
-    # the exact wrong-result bug this clearing exists to prevent.
-    # Same rule as the sink's existence check: real failures must
-    # propagate. (Lazy imports only to avoid a module-load cycle;
-    # both modules import catalog.)
-    from morphl_community_edition_spark.operators import dedup as _dedup
-    from morphl_community_edition_spark.queries import pipeline_ops as _pipe
-
-    counts = _pipe._DOC_COUNT_MEMO.get(spark)
-    if counts is not None:
-        if sf_dir is None:
-            counts.clear()
-        else:
-            counts.pop(sf_dir, None)
-    _dedup._FRAC_COUNT_MEMO.pop(spark, None)
-    # the q134 built-index memo is the same staleness class: a
-    # rewritten fixture needs a REBUILT index, not a re-probe of the
-    # old one
-    idx = _pipe._INDEX_MEMO.get(spark)
-    if idx is not None:
-        if sf_dir is None:
-            idx.clear()
-        else:
-            idx.pop(sf_dir, None)
-    # the q150 persisted ANN index memo — same staleness class
-    from morphl_community_edition_spark.queries import llm as _llm
-
-    from morphl_community_edition_spark.queries import workload as _workload
-
-    for _memo in (_llm._ANN_INDEX_MEMO, _llm._TEXT_INDEX_MEMO, _workload._SERVING_MEMO):
-        m = _memo.get(spark)
-        if m is not None:
-            if sf_dir is None:
-                m.clear()
-            else:
-                m.pop(sf_dir, None)
-    # the staged micro-batch input cache (sources/stream) snapshots
-    # table CONTENT on disk — same staleness class, cleared lazily to
-    # avoid a circular import
-    try:
-        from morphl_community_edition_spark.sources import stream as _stream
-
-        _stream.invalidate_staged(sf_dir)
-    except Exception:  # noqa: BLE001 — cache clear is best-effort
-        pass
-    return len(victims)
+    Two steps: ``session.invalidate`` drops every registry entry
+    tagged with ``sf_dir`` (table plans, view registrations, corpus
+    counts, built index/serving artifacts, staged stream inputs) plus
+    the plan-content-keyed ones (fan-out verdicts, valve counts); then
+    Spark's cached file listings for the table paths are refreshed.
+    Returns the number of registry entries dropped."""
+    dropped = invalidate(spark, sf_dir)
+    for name in TABLES:
+        spark.catalog.refreshByPath(table_path(sf_dir, name))
+    return dropped

@@ -66,14 +66,15 @@ class PreparedQuery:
     of the plan, and (3) any shuffle stages the scheduler finds
     already materialized from a previous run of THIS plan. Scan-side
     stages re-execute every run(), but the plan's FILE LISTING was
-    snapshotted at build — and the engine's catalog additionally
-    memoizes table plans per (session, sf_dir) — so an in-process
-    rewrite of a source path is NOT picked up by run() alone, nor by
+    snapshotted at build — and the session registry (session.memo)
+    additionally keeps table plans, corpus counts and built index /
+    serving artifacts per (session, sf_dir) — so an in-process rewrite
+    of a source path is NOT picked up by run() alone, nor by
     rebuilding the query naively. refresh() therefore does both: it
-    drops this handle's plan AND invalidates the catalog's memoized
-    tables + Spark's cached file listings for the engine's sf_dir
-    (catalog.invalidate_tables), so the next run() truly re-plans
-    against the current files. (bench.py measures both tiers: the
+    drops this handle's plan AND drops every registry entry for the
+    engine's sf_dir plus Spark's cached file listings
+    (catalog.invalidate_tables), so the next run() truly re-plans and
+    rebuilds against the current files. (bench.py measures both tiers: the
     plan-reuse path is the queries_prepared column, never the
     headline.)"""
 
@@ -101,9 +102,10 @@ class PreparedQuery:
         return self.df.collect()
 
     def refresh(self) -> "PreparedQuery":
-        """Drop the cached plan AND the catalog's memoized tables /
-        Spark file-listing caches for this engine's sf_dir, so the
-        next run() re-plans from the current source files."""
+        """Drop the cached plan AND everything the session registry
+        derived from this engine's sf_dir (plus Spark's file-listing
+        caches), so the next run() re-plans from the current source
+        files."""
         catalog.invalidate_tables(self._engine.spark, self._engine.sf_dir)
         self._df = None
         return self

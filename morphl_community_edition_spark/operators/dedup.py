@@ -17,17 +17,13 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from morphl_community_edition_spark.functions.hashing import md5_long60
 from morphl_community_edition_spark.functions.rounding import crnd
 from morphl_community_edition_spark.plans.hints import fan_out_narrow_scan
-
-
-_FRAC_COUNT_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+from morphl_community_edition_spark.session import memo
 
 # incremental-dedup (q114/q134) contract constants — canonical home,
 # shared by the direct form, its oracle f-string, and the persisted
@@ -40,21 +36,16 @@ INCR_NEAR_THRESHOLD = 0.5
 def _memo_count(df: DataFrame) -> int:
     """Corpus row count memoized per (session, semantic plan) — the
     fractional df-valve needs it at every plan BUILD, and bench's
-    honest-warm loops rebuild the same valved query dozens of times
-    (the q114 _DOC_COUNT_MEMO device, keyed by semanticHash so any
-    immutable input frame can use it; same staleness caveat as
-    plans/hints' fan-out memo: inputs are assumed immutable within a
-    process)."""
-    memo = _FRAC_COUNT_MEMO.setdefault(df.sparkSession, {})
+    honest-warm loops rebuild the same valved query dozens of times.
+    Keyed by semanticHash so any input frame can use it; the entry is
+    untagged in the session registry, so every
+    ``catalog.invalidate_tables`` drops it (a valve resolved from a
+    stale count changes which shingles are cut)."""
     # columns ride in the key beside the 32-bit semanticHash (the
     # round-9 hints.py collision guard): a cross-plan collision would
     # resolve the df valve against the WRONG corpus size silently
     key = (df.semanticHash(), tuple(df.columns))
-    n = memo.get(key)
-    if n is None:
-        n = df.count()
-        memo[key] = n
-    return n
+    return memo(df.sparkSession, "dedup.frac_count", key, df.count)
 
 
 def resolve_doc_freq_limit(limit: int | float, n_docs: int, min_df: int = 2) -> int:

@@ -325,6 +325,11 @@ def read_commit(path: str) -> dict | None:
     return read_json_record(os.path.join(path, COMMIT_MARKER))
 
 
+def is_committed(path: str) -> bool:
+    """Whether the build-once index at ``path`` has its commit marker."""
+    return read_commit(path) is not None
+
+
 def require_commit(path: str, what: str) -> dict:
     c = read_commit(path)
     if c is None:

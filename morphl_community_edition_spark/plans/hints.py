@@ -23,10 +23,11 @@ driver holds build-side copies during broadcast construction.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from morphl_community_edition_spark.session import memo
 
 DEFAULT_BROADCAST_FILE_LIMIT = 64 << 20  # 64 MiB on disk
 
@@ -81,14 +82,12 @@ def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
     plan, parallelism, split confs): hot query rebuilds (bench.py's
     honest-warm loops re-plan the same scans dozens of times) pay it
     once, not per build (ADVICE r5). Only df.semanticHash() — analysis,
-    no physical planning — runs on a memo hit. The memo assumes scan
-    inputs are immutable within a process (true for the fixture
-    tables); a path rewritten in-process with a different file count
-    under identical confs would serve a stale verdict — never do that
-    through this helper."""
+    no physical planning — runs on a memo hit. The verdict lives in
+    the session registry untagged (a semantic plan cannot be mapped
+    back to a path), so any ``catalog.invalidate_tables`` drops it and
+    a rewrite that changed a table's file count is re-probed."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    memo = _FANOUT_MEMO.setdefault(spark, {})
     # columns ride in the key alongside the 32-bit semanticHash so a
     # hash collision between structurally different plans (possible
     # in a very long session — round-9 review) almost surely misses
@@ -102,10 +101,7 @@ def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
         _conf(spark, "spark.sql.files.maxPartitionBytes"),
         _conf(spark, "spark.sql.files.openCostInBytes"),
     )
-    need = memo.get(key)
-    if need is None:
-        need = df.rdd.getNumPartitions() < target
-        memo[key] = need
+    need = memo(spark, "hints.fanout", key, lambda: df.rdd.getNumPartitions() < target)
     return df.repartition(target) if need else df
 
 
@@ -119,22 +115,6 @@ def _conf(spark: SparkSession, key: str) -> str:
         return spark.conf.get(key)
     except Exception:  # noqa: BLE001 — conf unreadable: exclude from key
         return "<unset>"
-
-
-# session -> {(semanticHash, parallelism, split confs) -> needs_fanout}.
-# Weak session key: a stopped session's memo must not leak to a new
-# session recycled at the same address (same device as catalog's table
-# memo).
-_FANOUT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, bool]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-# Measurement escape for tools/ab_pinsort.py ONLY: False reproduces
-# the exact pre-round-14 plain-orderBy plan so the interleaved A/B
-# compares the shipped code path against its true predecessor. Never
-# set in production code.
-PIN_UNBOUNDED_SORT = True
 
 
 def pinned_order(df, *cols):
@@ -163,12 +143,20 @@ def pinned_order(df, *cols):
     so an executor loss fails the query instead of self-healing —
     re-run, or swap for reliable checkpointing on long-lived jobs.
 
+    Pin lifetime: the checkpointed blocks stay pinned in executor
+    storage until ContextCleaner collects the checkpointed RDD, i.e.
+    after the returned frame is garbage-collected on the driver. Each
+    pin is group-bounded, but in a long-lived session that re-runs
+    these serves the pins accumulate until collection;
+    ``perfbench/run.py --trace 1`` shows the count as
+    ``storage.pinned_rdds``.
+
     The pre-pin child rides on the result as ``_morphl_pre_pin`` so
     plan gates can keep asserting scan-level evidence (states-only
     serves, broadcast joins) that the checkpoint's ExistingRDD scan
-    would otherwise hide."""
-    if not PIN_UNBOUNDED_SORT:  # A/B measurement escape, see above
-        return df.orderBy(*cols)
+    would otherwise hide. It is a plain Python attribute, so any later
+    transform drops it: ``pinned_order`` must be the OUTERMOST
+    transform of a query's result."""
     out = df.localCheckpoint(eager=False).orderBy(*cols)
     out._morphl_pre_pin = df
     return out

@@ -36,6 +36,7 @@ from morphl_community_edition_spark.plans.hints import fan_out_narrow_scan
 from morphl_community_edition_spark.operators import manifest as _manifest
 from morphl_community_edition_spark.queries import query
 from morphl_community_edition_spark.queries.windows import EVENTS_US
+from morphl_community_edition_spark.session import artifact
 
 
 @query("q18_approx_count_distinct")  # no oracle: HLL++ sketch differs from DuckDB's by design
@@ -1256,35 +1257,18 @@ def q150_persisted_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once memo for the persisted ANN index (round 11: shared
-    by q150 and the q157 hybrid serve). Same staleness class as q134:
-    a rewritten fixture needs a REBUILT index — the memo is cleared by
-    catalog.invalidate_tables, and a missing commit forces a build."""
-    import hashlib as _hl
-    import os as _os
-
-    from morphl_community_edition_spark.catalog import index_root
+    """Build-once session artifact for the persisted ANN index (round
+    11: shared by q150 and the q157 hybrid serve). Same staleness class
+    as q134: a rewritten fixture needs a REBUILT index, and a missing
+    commit forces a build."""
     from morphl_community_edition_spark.operators.ann_index import build_ann_index
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    path = _os.path.join(
-        index_root(spark), "morphl_ann_index", spark.sparkContext.applicationId, tag
+    return artifact(
+        spark, "morphl_ann_index", sf_dir,
+        build=lambda p: build_ann_index(load_table(spark, sf_dir, "embeddings"), p, n_cells=16),
+        committed=_manifest.is_committed,
     )
-    built = _ANN_INDEX_MEMO.setdefault(spark, {})
-    if built.get(sf_dir) != path or _manifest.read_commit(path) is None:
-        build_ann_index(load_table(spark, sf_dir, "embeddings"), path, n_cells=16)
-        built[sf_dir] = path
-    return path
 
-
-# session -> {sf_dir -> built index path}: the q134 staleness class —
-# a rewritten fixture needs a REBUILT index (cleared alongside the
-# other memos by catalog.invalidate_tables)
-import weakref as _weakref  # noqa: E402
-
-_ANN_INDEX_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    _weakref.WeakKeyDictionary()
-)
 
 # persisted serve == in-session full-probe pipeline by construction =>
 # the same oracle certifies both (the q114→q134 device)
@@ -1313,30 +1297,19 @@ def q151_persisted_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once memo for the persisted BM25 index (round 11: shared
-    by q151 and the q157 hybrid serve); q134's staleness contract, as
-    in _ensure_ann_index."""
-    import hashlib as _hl
-    import os as _os
-
-    from morphl_community_edition_spark.catalog import index_root
+    """Build-once session artifact for the persisted BM25 index (round
+    11: shared by q151 and the q157 hybrid serve); q134's staleness
+    contract, as in _ensure_ann_index."""
     from morphl_community_edition_spark.operators.text_index import build_text_index
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    path = _os.path.join(
-        index_root(spark), "morphl_text_index", spark.sparkContext.applicationId, tag
+    return artifact(
+        spark, "morphl_text_index", sf_dir,
+        build=lambda p: build_text_index(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"), p
+        ),
+        committed=_manifest.is_committed,
     )
-    built = _TEXT_INDEX_MEMO.setdefault(spark, {})
-    if built.get(sf_dir) != path or _manifest.read_commit(path) is None:
-        docs = load_table(spark, sf_dir, "documents")
-        build_text_index(docs.select("doc_id", "text"), path)
-        built[sf_dir] = path
-    return path
 
-
-_TEXT_INDEX_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    _weakref.WeakKeyDictionary()
-)
 
 # persisted serve == q141 by construction for the same term set =>
 # the same oracle certifies both (the q114→q134 device)

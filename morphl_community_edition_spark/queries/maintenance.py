@@ -13,28 +13,57 @@ oracle can replay the same split exactly.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from morphl_community_edition_spark.catalog import index_root, load_table
+from morphl_community_edition_spark.catalog import load_table
 from morphl_community_edition_spark.functions.rounding import (
     dsum,
     sql_davg,
     sql_dsum,
 )
 from morphl_community_edition_spark.queries import query
+from morphl_community_edition_spark.session import artifact
 
 
-def _per_app_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Per-application scratch root for a persisted structure (the
-    q134 device: two concurrent runs on one host must never overwrite
-    each other's index mid-read)."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join(
-        index_root(spark), name, spark.sparkContext.applicationId, tag
+def _build_and_fold(li: DataFrame, spec, path: str, hist: bool = False) -> None:
+    """(Re)build the rollup (``hist``: histogram rollup) at ``path``
+    from the md5 '0'..'d' share of ``li`` and fold the 'e' and 'f'
+    shares in as two delta batches. The folds are independent
+    (distinct sids, disjoint slice dirs), so they overlap: the second
+    fold's scan back-fills the first's stage tail (guide §2.6; round
+    13)."""
+    from morphl_community_edition_spark.operators import incremental_agg as agg
+
+    build, append = (
+        (agg.build_hist_rollup, agg.append_hist_rollup)
+        if hist
+        else (agg.build_rollup, agg.append_rollup)
+    )
+    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
+    build(li.filter(hex1 < "e"), spec, path)
+    agg.fold_concurrently(
+        lambda: append(li.filter(hex1 == "e"), path, sid="batch-e"),
+        lambda: append(li.filter(hex1 == "f"), path, sid="batch-f"),
+    )
+
+
+def _folded_rollup(
+    spark: SparkSession, sf_dir: str, name: str, li: DataFrame, spec, hist: bool = False
+) -> str:
+    """``_build_and_fold``'s rollup as a build-once session artifact,
+    for the serve shapes that share one persisted structure (q169,
+    q173 and q174 read q168's histogram; q171 and q172 one grain
+    rollup). Rebuilt when no slice is committed or after
+    catalog.invalidate_tables."""
+    from morphl_community_edition_spark.operators import manifest
+
+    return artifact(
+        spark, name, sf_dir,
+        build=lambda p: _build_and_fold(li, spec, p, hist),
+        committed=manifest.committed_slices,
     )
 
 
@@ -77,33 +106,22 @@ def q159_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table is never re-read after ingest."""
     from morphl_community_edition_spark.operators.incremental_agg import (
         RollupSpec,
-        append_rollup,
-        build_rollup,
-        fold_concurrently,
         read_rollup,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = RollupSpec(
         keys=("l_suppkey",),
         measures={"l_quantity": 2, "l_extendedprice": 2},
         extrema=("l_shipdate",),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_rollup")
-    build_rollup(li.filter(hex1 < "e"), spec, path)
-    # the two delta folds are independent (distinct sids, disjoint
-    # slice dirs) — overlap them so the second fold's scan back-fills
-    # the first's stage tail (guide §2.6; round 13)
-    fold_concurrently(
-        lambda: append_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-        lambda: append_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-    )
+    path = artifact(spark, "morphl_rollup", sf_dir)
+    _build_and_fold(li, spec, path)
     served = read_rollup(spark, path)
     # pinned_order A/B'd here and NOT kept: the summary serve's
     # post-shuffle segment is one |groups|-sized final agg, so the
     # sampling re-execution the pin removes is already cheap —
-    # measured wash/loss both runs (tools/ab_pinsort.py, round 14)
+    # measured wash/loss both runs (OPTIMIZATION_r14.md, round 14)
     return served.select(
         "l_suppkey",
         "n_rows",
@@ -143,7 +161,7 @@ def q160_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk"))
-    path = _per_app_path(spark, sf_dir, "morphl_hll_daily")
+    path = artifact(spark, "morphl_hll_daily", sf_dir)
     daily.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return (
@@ -256,7 +274,7 @@ def q162_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = (pa - pb) * slp / F.lit(1e6)
     # pinned_order A/B'd here and NOT kept: the |bins|-sized tail
     # above the sort is one broadcast-join projection — measured
-    # wash/loss in the clean run (tools/ab_pinsort.py, round 14)
+    # wash/loss in the clean run (OPTIMIZATION_r14.md, round 14)
     return (
         t.crossJoin(F.broadcast(tot))
         .select(
@@ -329,7 +347,7 @@ def q164_zorder_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = z_value(x, y)
     # pinned_order A/B'd here and NOT kept: the |buckets|-sized tail
     # above the sort is one hash agg — contradictory small swings
-    # across two clean sessions = wash (tools/ab_pinsort.py, round 14)
+    # across two clean sessions = wash (OPTIMIZATION_r14.md, round 14)
     return (
         o.select(
             zbucket(z, 14).alias("zbucket"),
@@ -378,7 +396,7 @@ def q165_compacted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         measures={"l_quantity": 2, "l_extendedprice": 2},
         extrema=("l_shipdate",),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_rollup_compact")
+    path = artifact(spark, "morphl_rollup_compact", sf_dir)
     build_rollup(li.filter(hex1 < "d"), spec, path)
     # independent delta folds overlapped (guide §2.6; round 13); the
     # compaction waits for both commits
@@ -393,7 +411,7 @@ def q165_compacted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocations of the build+compact+append pipeline are too
     # unstable to measure the tail (3-43 s swings), and the summary
     # serve's post-shuffle segment is one |groups|-sized final agg
-    # anyway (same reason as q159; tools/ab_pinsort.py, round 14)
+    # anyway (same reason as q159; OPTIMIZATION_r14.md, round 14)
     return served.select(
         "l_suppkey",
         "n_rows",
@@ -413,19 +431,16 @@ _ORACLE_SQL["q165_compacted_rollup"] = _ORACLE_SQL["q159_incremental_rollup"]
 
 
 def _zorder_orders_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-missing the z-clustered orders layout shared by the
-    z-order serve queries (q166/q167): clustered on (customer,
-    order-day), memoized per (session, sf_dir) like every persisted
-    structure. bucket_bits lives in the layout's sidecar from here on."""
-    import os as _os
-
+    """The z-clustered orders layout shared by the z-order serve
+    queries (q166/q167), a build-once session artifact: clustered on
+    (customer, order-day). bucket_bits lives in the layout's sidecar
+    from here on."""
     from morphl_community_edition_spark.operators.zorder import zorder_layout
 
-    path = _per_app_path(spark, sf_dir, "morphl_zorder_orders")
-    if not _os.path.isdir(path):
-        o = load_table(spark, sf_dir, "orders")
-        zorder_layout(
-            o,
+    return artifact(
+        spark, "morphl_zorder_orders", sf_dir,
+        build=lambda p: zorder_layout(
+            load_table(spark, sf_dir, "orders"),
             F.pmod(F.col("o_custkey"), F.lit(65536)),
             F.pmod(
                 F.datediff(
@@ -433,10 +448,11 @@ def _zorder_orders_layout(spark: SparkSession, sf_dir: str) -> str:
                 ),
                 F.lit(65536),
             ),
-            path,
+            p,
             bucket_bits=14,
-        )
-    return path
+        ),
+        committed=os.path.isdir,
+    )
 
 
 @query(
@@ -630,22 +646,13 @@ def q168_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table is read once per fold, never at serve."""
     from morphl_community_edition_spark.operators.incremental_agg import (
         HistSpec,
-        append_hist_rollup,
-        build_hist_rollup,
-        fold_concurrently,
         quantiles_from_hist,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_rollup")
-    build_hist_rollup(li.filter(hex1 < "e"), spec, path)
-    # independent delta folds overlapped (guide §2.6; round 13)
-    fold_concurrently(
-        lambda: append_hist_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-        lambda: append_hist_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-    )
+    path = artifact(spark, "morphl_hist_rollup", sf_dir)
+    _build_and_fold(li, spec, path, hist=True)
     from morphl_community_edition_spark.plans.hints import pinned_order
 
     # group-bounded serve result; pin before the presentation sort so
@@ -688,30 +695,18 @@ def q169_hist_topk_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the serve is one row_number window over histogram
     rows (grid-bounded per group); the heavy fact pass was paid once
     at q168's build/folds."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         HistSpec,
-        append_hist_rollup,
-        build_hist_rollup,
-        fold_concurrently,
         topk_values_from_hist,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_rollup")
-    if not _os.path.isdir(path):
-        build_hist_rollup(li.filter(hex1 < "e"), spec, path)
-        fold_concurrently(
-            lambda: append_hist_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_hist_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_hist_rollup", li, spec, hist=True)
     # pinned_order A/B'd here and NOT kept: unlike the quantile
     # readers there is no agg after the rank window (the filter is
     # free), so the re-executed segment is short — contradictory
-    # swings across clean sessions = wash (tools/ab_pinsort.py, r14)
+    # swings across clean sessions = wash (OPTIMIZATION_r14.md, r14)
     return topk_values_from_hist(spark, path, _Q169_K).orderBy("l_suppkey", "rk")
 
 
@@ -748,13 +743,8 @@ def q170_rollup_view_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     state table by |groups|-sized merges — the reason a warehouse
     maintains the finest useful grain instead of one rollup per
     dashboard."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         RollupSpec,
-        append_rollup,
-        build_rollup,
-        fold_concurrently,
         read_rollup,
         rollup_spec,
         rollup_view_match_frame,
@@ -766,20 +756,12 @@ def q170_rollup_view_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = RollupSpec(
         keys=("l_suppkey",),
         measures={"l_extendedprice": 2},
         extrema=("l_shipdate",),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_vm_rollup")
-    if not _os.path.isdir(path):
-        build_rollup(li.filter(hex1 < "e"), spec, path)
-        # independent delta folds overlapped (guide §2.6; round 13)
-        fold_concurrently(
-            lambda: append_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_vm_rollup", li, spec)
     states = read_rollup(spark, path, finalize=False)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
@@ -795,7 +777,7 @@ def q170_rollup_view_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rollup_view_match_frame(joined, rollup_spec(path), {"nation": F.col("nation")})
     # pinned_order A/B'd here and NOT kept: the |nations|-sized tail
     # above the sort is one regroup agg — measured dead wash (+0.2%,
-    # tools/ab_pinsort.py, round 14)
+    # OPTIMIZATION_r14.md, round 14)
     return out.select(
         "nation",
         "n_rows",
@@ -841,33 +823,20 @@ def q171_rollup_grain_lattice(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every coarser time grain (quarter, year) plus every dim grain
     (nation via q170's join device) serves from the same structure
     with a |states|-sized merge."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         RollupSpec,
-        append_rollup,
-        build_rollup,
-        fold_concurrently,
         rollup_view_match,
     )
 
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_month", F.date_trunc("month", F.col("l_shipdate")).cast("date")
     )
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = RollupSpec(
         keys=("l_suppkey", "ship_month"),
         measures={"l_extendedprice": 2},
         extrema=("l_shipdate",),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_grain_rollup")
-    if not _os.path.isdir(path):
-        build_rollup(li.filter(hex1 < "e"), spec, path)
-        # independent delta folds overlapped (guide §2.6; round 13)
-        fold_concurrently(
-            lambda: append_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_grain_rollup", li, spec)
     out = rollup_view_match(
         spark,
         path,
@@ -913,7 +882,7 @@ def q172_rollup_lattice_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     |states|-sized merge away; the warehouse maintains exactly one
     fine-grain table for the whole dashboard family. q171 and this
     query deliberately share the persisted structure (same
-    _per_app_path name): one build, many serve shapes, like the
+    artifact name): one build, many serve shapes, like the
     q168/q169 histogram pair.
 
     Scale shape at 100 TB: the dim join touches |suppliers × months|
@@ -921,13 +890,8 @@ def q172_rollup_lattice_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is |nations × quarters| — both dashboard-sized. The fact
     table is read only at build/fold (plan-gated:
     tests/test_plans.py::test_q172_cross_lattice_serves_from_states)."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         RollupSpec,
-        append_rollup,
-        build_rollup,
-        fold_concurrently,
         read_rollup,
         rollup_spec,
         rollup_view_match_frame,
@@ -941,20 +905,12 @@ def q172_rollup_lattice_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_month", F.date_trunc("month", F.col("l_shipdate")).cast("date")
     )
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = RollupSpec(
         keys=("l_suppkey", "ship_month"),
         measures={"l_extendedprice": 2},
         extrema=("l_shipdate",),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_grain_rollup")  # shared with q171
-    if not _os.path.isdir(path):
-        build_rollup(li.filter(hex1 < "e"), spec, path)
-        # independent delta folds overlapped (guide §2.6; round 13)
-        fold_concurrently(
-            lambda: append_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_grain_rollup", li, spec)  # shared with q171
     states = read_rollup(spark, path, finalize=False)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
@@ -1026,13 +982,8 @@ def q173_hist_view_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine-grain histogram answers every dashboard grain's percentile
     question (plan-gated: tests/test_plans.py::
     test_q173_hist_view_match_serves_from_states)."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         HistSpec,
-        append_hist_rollup,
-        build_hist_rollup,
-        fold_concurrently,
         hist_view_match,
         quantiles_from_hist_frame,
         read_hist,
@@ -1044,15 +995,8 @@ def q173_hist_view_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_rollup")  # shared with q168/q169
-    if not _os.path.isdir(path):
-        build_hist_rollup(li.filter(hex1 < "e"), spec, path)
-        fold_concurrently(
-            lambda: append_hist_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_hist_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_hist_rollup", li, spec, hist=True)  # shared with q168/q169
     states = read_hist(spark, path)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
@@ -1117,26 +1061,14 @@ def q174_hist_range_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-bounded per supplier, never fact rows; no window, no
     shuffle beyond the |states|-sized merge (plan-gated:
     tests/test_plans.py::test_q174_range_mass_serves_from_histogram)."""
-    import os as _os
-
     from morphl_community_edition_spark.operators.incremental_agg import (
         HistSpec,
-        append_hist_rollup,
-        build_hist_rollup,
-        fold_concurrently,
         range_mass_from_hist,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    hex1 = F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_rollup")  # shared with q168/q169/q173
-    if not _os.path.isdir(path):
-        build_hist_rollup(li.filter(hex1 < "e"), spec, path)
-        fold_concurrently(
-            lambda: append_hist_rollup(li.filter(hex1 == "e"), path, sid="batch-e"),
-            lambda: append_hist_rollup(li.filter(hex1 == "f"), path, sid="batch-f"),
-        )
+    path = _folded_rollup(spark, sf_dir, "morphl_hist_rollup", li, spec, hist=True)  # shared with q168/q169/q173
     return range_mass_from_hist(spark, path, _Q174_BANDS).orderBy("l_suppkey")
 
 
@@ -1197,7 +1129,7 @@ def q175_hist_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 = F.md5(F.col("l_orderkey").cast("string"))
     hex1, hex2 = F.substring(md5, 1, 1), F.substring(md5, 2, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_retract")
+    path = artifact(spark, "morphl_hist_retract", sf_dir)
     build_hist_rollup(li.filter(hex1 < "e"), spec, path)
     # independent delta folds overlapped (guide §2.6; round 13); the
     # retraction waits for both — fold_concurrently returns only after
@@ -1288,7 +1220,7 @@ def q176_hist_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 = F.md5(F.col("l_orderkey").cast("string"))
     hex1, hex2 = F.substring(md5, 1, 1), F.substring(md5, 2, 1)
     spec = HistSpec(keys=("l_suppkey",), value="l_extendedprice", scale=_Q168_SCALE)
-    path = _per_app_path(spark, sf_dir, "morphl_hist_timetravel")
+    path = artifact(spark, "morphl_hist_timetravel", sf_dir)
     build_hist_rollup(li.filter(hex1 < "e"), spec, path)
     # independent delta folds overlapped (guide §2.6; round 13); the
     # snapshot pin waits for both commits
@@ -1358,7 +1290,7 @@ def q177_rollup_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         measures={"l_quantity": 2, "l_extendedprice": 2},
         extrema=(),
     )
-    path = _per_app_path(spark, sf_dir, "morphl_rollup_retract")
+    path = artifact(spark, "morphl_rollup_retract", sf_dir)
     build_rollup(li.filter(hex1 < "e"), spec, path)
     # independent delta folds overlapped (guide §2.6; round 13); the
     # retraction waits for both commits
@@ -1446,7 +1378,7 @@ def q178_sample_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_cols=("l_orderkey", "l_linenumber"),
         k=_Q178_K,
     )
-    path = _per_app_path(spark, sf_dir, "morphl_sample_rollup")
+    path = artifact(spark, "morphl_sample_rollup", sf_dir)
     build_sample_rollup(li.filter(hex1 < "e"), spec, path)
     append_sample_rollup(li.filter(hex1 == "e"), path, sid="batch-e")
     append_sample_rollup(li.filter(hex1 == "f"), path, sid="batch-f")

@@ -14,8 +14,6 @@ hash-match, not a distribution-shape tolerance.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -31,6 +29,7 @@ from morphl_community_edition_spark.operators.textstats import (
     lexical_diversity_score_sql,
 )
 from morphl_community_edition_spark.queries import query
+from morphl_community_edition_spark.session import artifact, memo
 
 # hex digit 1 of md5(key): '0'..'b' → train (12/16), 'c','d' → val,
 # 'e','f' → test. Uniformity comes from md5; the split is a pure
@@ -580,10 +579,7 @@ def q114_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle mirrors the cut CTE-for-CTE. One extra count() job
     resolves the corpus-relative limit."""
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = _DOC_COUNT_MEMO.setdefault(spark, {}).get(sf_dir)
-    if n_docs is None:
-        n_docs = docs.count()
-        _DOC_COUNT_MEMO[spark][sf_dir] = n_docs
+    n_docs = _doc_count(spark, sf_dir, docs)
     from morphl_community_edition_spark.plans.hints import fan_out_narrow_scan
 
     return incremental_dedup_frame(
@@ -591,13 +587,11 @@ def q114_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session -> {sf_dir -> documents row count} for the valve limit: the
-# fixture tables are immutable within a process, so bench's rebuild
-# loops pay the count() job once, not per build. Weak session key —
-# same rationale as catalog._TABLE_MEMO.
-_DOC_COUNT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
+def _doc_count(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
+    """``documents`` row count for the valve limit, memoized per
+    (session, sf_dir) so bench's rebuild loops pay the count() job
+    once, not per build."""
+    return memo(spark, "pipeline_ops.doc_count", None, docs.count, sf_dir=sf_dir)
 
 
 @query("q134_indexed_incremental_dedup")
@@ -611,9 +605,6 @@ def q134_indexed_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     so one SQL twin certifies both); the in-query index build is the
     one corpus pass a real pipeline pays at ingest time, amortized
     across every later batch."""
-    import hashlib
-    import os
-
     from morphl_community_edition_spark.operators.incremental_index import (
         build_dedup_index,
         incremental_dedup_with_index,
@@ -622,40 +613,17 @@ def q134_indexed_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(F.col("source") != "src1").select("doc_id", "text")
     batch = docs.filter(F.col("source") == "src1").select("doc_id", "text")
-    n_docs = _DOC_COUNT_MEMO.setdefault(spark, {}).get(sf_dir)
-    if n_docs is None:
-        n_docs = docs.count()
-        _DOC_COUNT_MEMO[spark][sf_dir] = n_docs
-    # path is per-APPLICATION (applicationId), not shared across
-    # processes: two concurrent runs on one host must never overwrite
-    # each other's index mid-read (round-7 review)
-    from morphl_community_edition_spark.catalog import index_root
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(
-        index_root(spark), "morphl_dedup_index", spark.sparkContext.applicationId, tag
-    )
+    n_docs = _doc_count(spark, sf_dir, docs)
     # the index build is the ingest-time cost a production pipeline
-    # pays ONCE — memoized per (session, sf_dir) like the count memos
-    # (fixtures immutable in-process; invalidate_tables drops it), so
-    # warm re-runs measure the amortized per-batch classify, not a
-    # rebuild (round-7 sweep: 17.9 s/run unmemoized vs ~2 s amortized).
-    # The directory is re-checked on every hit: a /tmp cleaner can
-    # remove it in a long-lived session, and the right response is a
-    # rebuild, not an AnalysisException.
-    built = _INDEX_MEMO.setdefault(spark, {})
-    if built.get(sf_dir) != path or not _ix_manifest.committed_slices(path):
-        build_dedup_index(existing, path)
-        built[sf_dir] = path
+    # pays ONCE — a session artifact, so warm re-runs measure the
+    # amortized per-batch classify, not a rebuild (round-7 sweep:
+    # 17.9 s/run unmemoized vs ~2 s amortized)
+    path = artifact(
+        spark, "morphl_dedup_index", sf_dir,
+        build=lambda p: build_dedup_index(existing, p),
+        committed=_ix_manifest.committed_slices,
+    )
     return incremental_dedup_with_index(spark, path, batch, n_docs=n_docs)
-
-
-# session -> {sf_dir -> built index path}: result-affecting staleness
-# class (a rewritten fixture needs a rebuilt index), cleared by
-# catalog.invalidate_tables alongside the count memos
-_INDEX_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 @query("q153_compacted_index_dedup")
@@ -670,10 +638,6 @@ def q153_compacted_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers build -> append -> compact -> classify. The q124/q134
     "pruning made vacuous" oracle-reuse device, applied to storage
     maintenance instead of probe pruning."""
-    import hashlib
-    import os
-
-    from morphl_community_edition_spark.catalog import index_root
     from morphl_community_edition_spark.operators.incremental_index import (
         append_to_index,
         build_dedup_index,
@@ -686,18 +650,9 @@ def q153_compacted_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out_narrow_scan(load_table(spark, sf_dir, "documents"))
     existing = docs.filter(F.col("source") != "src1").select("doc_id", "text")
     batch = docs.filter(F.col("source") == "src1").select("doc_id", "text")
-    n_docs = _DOC_COUNT_MEMO.setdefault(spark, {}).get(sf_dir)
-    if n_docs is None:
-        n_docs = docs.count()
-        _DOC_COUNT_MEMO[spark][sf_dir] = n_docs
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(
-        index_root(spark), "morphl_dedup_index_compacted",
-        spark.sparkContext.applicationId, tag,
-    )
-    memo_key = f"{sf_dir}#compacted"
-    built = _INDEX_MEMO.setdefault(spark, {})
-    if built.get(memo_key) != path or not _ix_manifest.committed_slices(path):
+    n_docs = _doc_count(spark, sf_dir, docs)
+
+    def build(path: str) -> None:
         # deterministic halves so the slice layout (hence the merge)
         # is reproducible across runs and engines
         build_dedup_index(existing.filter(F.col("doc_id") % 2 == 0), path)
@@ -706,7 +661,11 @@ def q153_compacted_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged = compact_index(spark, path)
         assert merged == 2, f"expected to merge base+batch, merged {merged}"
-        built[memo_key] = path
+
+    path = artifact(
+        spark, "morphl_dedup_index_compacted", sf_dir,
+        build=build, committed=_ix_manifest.committed_slices,
+    )
     return incremental_dedup_with_index(spark, path, batch, n_docs=n_docs)
 
 

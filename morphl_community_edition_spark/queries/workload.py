@@ -182,15 +182,6 @@ def q96_prediction_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 POINT_LOOKUP_KEYS = (1, 2, 3, 5, 8, 13)
 _POINT_LOOKUP_BUCKETS = 16
 
-# session -> {sf_dir -> serving table path}: the q134/q150 staleness
-# class — a rewritten fixture needs a REBUILT serving table (cleared
-# by catalog.invalidate_tables)
-import weakref as _weakref  # noqa: E402
-
-_SERVING_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    _weakref.WeakKeyDictionary()
-)
-
 
 @query(
     "q154_point_lookup_serve",
@@ -213,29 +204,25 @@ def q154_point_lookup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = q96's own merge oracle filtered to the served keys, so
     the build→persist→lookup chain is hash-certified end to end (the
     q114→q134 shared-oracle device)."""
-    import hashlib as _hl
-    import os as _os
-
-    from morphl_community_edition_spark.catalog import index_root
     from morphl_community_edition_spark.operators import manifest as _manifest
     from morphl_community_edition_spark.operators.point_lookup import (
         point_lookup,
         write_serving_table,
     )
+    from morphl_community_edition_spark.session import artifact
 
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    path = _os.path.join(
-        index_root(spark), "morphl_serving", spark.sparkContext.applicationId, tag
-    )
-    built = _SERVING_MEMO.setdefault(spark, {})
-    if built.get(sf_dir) != path or _manifest.read_commit(path) is None:
-        write_serving_table(
+    # a rewritten fixture needs a REBUILT serving table: the session
+    # artifact drops on catalog.invalidate_tables
+    path = artifact(
+        spark, "morphl_serving", sf_dir,
+        build=lambda p: write_serving_table(
             q96_prediction_upsert(spark, sf_dir),
-            path,
+            p,
             key_col="user_id",
             n_buckets=_POINT_LOOKUP_BUCKETS,
-        )
-        built[sf_dir] = path
+        ),
+        committed=_manifest.is_committed,
+    )
     return point_lookup(spark, path, POINT_LOOKUP_KEYS).orderBy("user_id")
 
 

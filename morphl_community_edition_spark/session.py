@@ -20,11 +20,19 @@ Every knob here is load-bearing:
 - ``spark.sql.shuffle.partitions``: sized for the local test harness
   (32 cores); on a real cluster this is set per-job to ~2-3× total
   cores, and AQE coalesces down after each shuffle.
+
+The module also owns the engine's session-state registry (``memo``,
+``artifact``, ``invalidate``): every value the engine reuses across
+query builds lives there, keyed by the live session, under one
+invalidation rule.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import weakref
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -103,3 +111,108 @@ def apply_runtime_conf(spark: SparkSession) -> None:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - read-only conf on some builds
             pass
+
+
+def index_root(spark: SparkSession) -> str:
+    """Root directory for PERSISTED index artifacts (the q134 dedup
+    postings, q150 ANN cells, q151 BM25 buckets). Resolution order:
+    ``SPARK_GRAFT_INDEX_ROOT`` env var → ``spark.morphl.indexRoot``
+    session conf → the local temp dir. Local mode works out of the
+    box; a CLUSTER deployment must point this at shared storage —
+    an unqualified /tmp resolves per-machine, so executors and the
+    driver would write/read disjoint local directories and the
+    build→serve chain silently breaks (round-9 advice)."""
+    root = os.environ.get("SPARK_GRAFT_INDEX_ROOT")
+    if not root:
+        root = spark.conf.get("spark.morphl.indexRoot", None)
+    if not root:
+        import tempfile
+
+        root = tempfile.gettempdir()
+    return root
+
+
+# session -> {(namespace, sf_dir, key) -> value}. Keyed WEAKLY by the
+# live session object: an id()-based key could serve a stopped
+# session's state to a new session allocated at the recycled address,
+# and would never evict. Values assume the files under sf_dir are
+# immutable until invalidate(spark, sf_dir) says otherwise.
+_REGISTRY: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, Any]]" = (
+    weakref.WeakKeyDictionary()
+)
+_MISSING = object()
+
+
+def memo(
+    spark: SparkSession,
+    ns: str,
+    key: Any,
+    compute: Callable[[], Any],
+    sf_dir: str | None = None,
+    valid: Callable[[Any], bool] | None = None,
+) -> Any:
+    """Get-or-compute one session-scoped value under ``(ns, sf_dir, key)``.
+
+    ``sf_dir`` tags a value derived from that dataset's files, so
+    ``invalidate(spark, sf_dir)`` drops it. Leave it None for values
+    keyed by plan content (a semanticHash) that cannot be mapped back
+    to a path; those drop on every invalidate. ``valid`` re-checks a
+    hit (e.g. that a directory still exists) and recomputes on False.
+
+    The registry takes no lock, so unrelated builds overlap across
+    threads; two threads that miss on the SAME key both compute it and
+    the later store wins. Harmless for plans and counts; a
+    caller that builds one on-disk artifact from several threads must
+    warm it from one thread first."""
+    entries = _REGISTRY.setdefault(spark, {})
+    k = (ns, sf_dir, key)
+    value = entries.get(k, _MISSING)
+    if value is _MISSING or (valid is not None and not valid(value)):
+        value = compute()
+        entries[k] = value
+    return value
+
+
+def artifact(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    build: Callable[[str], None] | None = None,
+    committed: Callable[[str], Any] | None = None,
+) -> str:
+    """Path of the persisted structure ``name`` derived from ``sf_dir``:
+    ``index_root/name/applicationId/md5(sf_dir)[:10]``. The path is
+    per-APPLICATION so two concurrent runs on one host never overwrite
+    each other's artifact mid-read.
+
+    With ``build``, also materialize it: ``build(path)`` runs once per
+    (session, path) and again when ``committed(path)`` is falsy (a temp
+    cleaner removed it in a long-lived session) or after
+    ``invalidate(spark, sf_dir)`` (the source files were rewritten).
+    Without ``build`` the caller owns the contents and rewrites them
+    on every call."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    path = os.path.join(index_root(spark), name, spark.sparkContext.applicationId, tag)
+    if build is not None:
+
+        def _build() -> str:
+            build(path)
+            return path
+
+        memo(spark, "artifact", path, _build, sf_dir=sf_dir, valid=committed)
+    return path
+
+
+def invalidate(spark: SparkSession, sf_dir: str | None = None) -> int:
+    """Drop every registry entry tagged with ``sf_dir`` plus every
+    untagged (plan-content-keyed) entry; ``sf_dir=None`` drops all of
+    this session's entries. Returns the number dropped. This is the
+    one rule that makes reuse sound after files under ``sf_dir`` are
+    rewritten in-process (catalog.invalidate_tables)."""
+    entries = _REGISTRY.get(spark)
+    if not entries:
+        return 0
+    victims = [k for k in list(entries) if sf_dir is None or k[1] in (sf_dir, None)]
+    for k in victims:
+        entries.pop(k, None)
+    return len(victims)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from morphl_community_edition_spark.catalog import SCHEMAS, load_table
+from morphl_community_edition_spark.session import memo
 
 
 def stage_stream_input(
@@ -104,28 +105,14 @@ def read_stream_dir(spark: SparkSession, staged_dir: str, name: str = "events", 
     )
 
 
-# staged-dir cache: repeated Engine.stream() calls would otherwise
-# rewrite the table into a fresh orphaned temp dir every time
-_STAGED: dict[tuple[str, str, int], str] = {}
-
-
-def invalidate_staged(sf_dir: str | None = None) -> int:
-    """Drop staged-input dirs for one sf_dir (or all) so the next
-    Engine.stream() restages from the CURRENT table files — wired into
-    catalog.invalidate_tables, which owns the in-process-rewrite
-    contract (round-6 review finding: this cache snapshots table
-    content and survived the catalog invalidation)."""
-    victims = [k for k in list(_STAGED) if sf_dir is None or k[0] == sf_dir]
-    for k in victims:
-        del _STAGED[k]
-    return len(victims)
-
-
 def read_table_stream(spark: SparkSession, sf_dir: str, name: str = "events", max_files: int = 1) -> DataFrame:
-    """Stage + open in one call (Engine.stream)."""
-    key = (sf_dir, name, 8)
-    staged = _STAGED.get(key)
-    if staged is None or not os.path.isdir(staged):
-        staged = stage_stream_input(spark, sf_dir, name)
-        _STAGED[key] = staged
+    """Stage + open in one call (Engine.stream). The staged dir is a
+    session-registry entry tagged with ``sf_dir``: repeated calls reuse
+    it instead of rewriting the table into a fresh orphaned temp dir,
+    a removed dir is restaged, and catalog.invalidate_tables drops it
+    (it snapshots table content)."""
+    staged = memo(
+        spark, "stream.staged", name, lambda: stage_stream_input(spark, sf_dir, name),
+        sf_dir=sf_dir, valid=os.path.isdir,
+    )
     return read_stream_dir(spark, staged, name, max_files)

@@ -115,59 +115,81 @@ def test_prepared_refresh_sees_rewritten_source_files(spark, tmp_path):
     assert n_after == 3, f"refresh did not re-plan: {n_after} vs expected 3"
 
 
+def _registry(spark, ns: str, sf_dir: str | None) -> dict:
+    """This session's registry entries of one namespace and sf_dir tag."""
+    from morphl_community_edition_spark import session
+
+    return {
+        k[2]: v
+        for k, v in session._REGISTRY.get(spark, {}).items()
+        if k[0] == ns and k[1] == sf_dir
+    }
+
+
 def test_refresh_clears_valve_count_memos(spark, tmp_path):
-    """Round-7 advice: invalidate_tables() cleared table plans, view
-    memos, ts-unit verdicts and staged stream dirs — but NOT the
-    corpus row-count memos backing fractional df-valves
-    (operators/dedup._FRAC_COUNT_MEMO, pipeline_ops._DOC_COUNT_MEMO).
-    A rebuilt plan after an in-process rewrite has the same
-    semanticHash/sf_dir key, so a valved query resolved its threshold
-    from the STALE count — result-affecting, not perf-only. Proves
-    the memos now drop on refresh() and the valve re-resolves from
-    the rewritten corpus."""
+    """refresh() must drop every session-registry entry derived from
+    the rewritten sf_dir, not only the table plans. Two classes are
+    result-affecting:
+
+    - corpus row counts backing fractional df-valves (round-7 advice):
+      the doc count is sf_dir-tagged, the semanticHash-keyed valve
+      count is untagged; a valve resolved from a STALE count changes
+      which shingles are cut;
+    - built index artifacts: q153 used to memoize its compacted dedup
+      index under a private key the hand-kept invalidation list never
+      popped, so after a rewrite + refresh() it classified against the
+      OLD corpus. Its result must equal q114's DuckDB oracle over the
+      rewritten file."""
     import shutil
 
+    import duckdb
     import pandas as pd
 
+    from morphl_community_edition_spark.catalog import load_table
     from morphl_community_edition_spark.engine import Engine
     from morphl_community_edition_spark.operators import dedup as dedup_mod
-    from morphl_community_edition_spark.queries import pipeline_ops as pipe_mod
+    from morphl_community_edition_spark.queries import ORACLE_SQL
     from tests.conftest import SF_DIR_SMOKE
+    from tools.localcheck import canon_hash
 
-    shutil.copy(f"{SF_DIR_SMOKE}/documents.parquet", tmp_path / "documents.parquet")
+    docs_path = tmp_path / "documents.parquet"
+    shutil.copy(f"{SF_DIR_SMOKE}/documents.parquet", docs_path)
     sf_dir = str(tmp_path)
     eng = Engine(spark, sf_dir)
     prep = eng.prepare("q114_incremental_dedup")
     prep.run()
-    n_orig = pipe_mod._DOC_COUNT_MEMO[spark][sf_dir]
+    n_orig = _registry(spark, "pipeline_ops.doc_count", sf_dir)[None]
     assert n_orig > 10
+    q153 = eng.prepare("q153_compacted_index_dedup")
+    q153.run()
+    assert _registry(spark, "artifact", sf_dir), "q153 index not a session artifact"
 
     # exercise the semanticHash-keyed valve memo too (exact_jaccard
     # with a fractional max_doc_freq resolves via _memo_count)
-    from morphl_community_edition_spark.catalog import load_table
+    dedup_mod._memo_count(load_table(spark, sf_dir, "documents"))
+    assert _registry(spark, "dedup.frac_count", None)
 
-    docs = load_table(spark, sf_dir, "documents")
-    dedup_mod._memo_count(docs)
-    assert len(dedup_mod._FRAC_COUNT_MEMO.get(spark, {})) >= 1
-
-    pdf = pd.read_parquet(tmp_path / "documents.parquet").head(10)
-    pdf.to_parquet(tmp_path / "documents.parquet")
+    # rewrite the existing corpus: every non-src1 text becomes words
+    # no src1 document shares, so no src1 doc stays a near/exact dup
+    pdf = pd.read_parquet(docs_path)
+    old = pdf["source"] != "src1"
+    pdf.loc[old, "text"] = [
+        " ".join(f"zz{d}w{i}" for i in range(12)) for d in pdf.loc[old, "doc_id"]
+    ]
+    pdf.to_parquet(docs_path)
     prep.refresh()
-    assert sf_dir not in pipe_mod._DOC_COUNT_MEMO.get(spark, {}), (
-        "doc-count memo survived refresh — valve would use stale corpus size"
-    )
-    assert len(dedup_mod._FRAC_COUNT_MEMO.get(spark, {})) == 0, (
-        "frac-count memo survived refresh"
-    )
-    prep.run()
-    assert pipe_mod._DOC_COUNT_MEMO[spark][sf_dir] == 10, (
-        "valve did not re-resolve from the rewritten corpus"
-    )
-    # q134's built-index memo shares the staleness class (round-7)
-    pipe_mod._INDEX_MEMO.setdefault(spark, {})[sf_dir] = "/tmp/fake-index"
-    from morphl_community_edition_spark.catalog import invalidate_tables
+    for ns in ("pipeline_ops.doc_count", "artifact", "catalog.table"):
+        assert not _registry(spark, ns, sf_dir), f"{ns} entries survived refresh"
+    assert not _registry(spark, "dedup.frac_count", None), "frac-count memo survived refresh"
 
-    invalidate_tables(spark, sf_dir)
-    assert sf_dir not in pipe_mod._INDEX_MEMO.get(spark, {}), (
-        "index memo survived refresh — q134 would probe a stale index"
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs_path}')")
+    want = canon_hash(con.execute(ORACLE_SQL["q153_compacted_index_dedup"]).df())
+    got = canon_hash(q153.refresh().df.toPandas())
+    assert got == want, "q153 classified against the pre-rewrite index"
+
+    pdf.head(10).to_parquet(docs_path)
+    prep.refresh().run()
+    assert _registry(spark, "pipeline_ops.doc_count", sf_dir)[None] == 10, (
+        "valve did not re-resolve from the rewritten corpus"
     )

@@ -37,11 +37,16 @@ def _serve_plan(df) -> str:
     on the pre-pin child the hint attaches as ``_morphl_pre_pin``.
     When present, assert the outer plan really is the pinned shape
     (an RDD scan, no parquet re-read) and return the child's plan;
-    a plain tail returns its own plan unchanged."""
+    a plain tail returns its own plan unchanged. A checkpoint scan
+    without the attribute means a transform after pinned_order
+    dropped it."""
     child = getattr(df, "_morphl_pre_pin", None)
-    if child is None:
-        return df._jdf.queryExecution().executedPlan().toString()
     outer = df._jdf.queryExecution().executedPlan().toString()
+    if child is None:
+        assert "ExistingRDD" not in outer, (
+            "pre-pin child lost: pinned_order must be the outermost transform"
+        )
+        return outer
     assert "ExistingRDD" in outer, "pinned tail lost its checkpoint scan"
     assert "FileScan" not in outer, "pinned tail re-read a table"
     return child._jdf.queryExecution().executedPlan().toString()
@@ -1368,9 +1373,9 @@ def test_q166_zorder_serve_prunes_partitions(spark):
     assert "zbucket" in pf
     assert "dynamicpruning" not in plan.lower()
     # files actually touched vs files in the layout
-    from morphl_community_edition_spark.queries.maintenance import _per_app_path
+    from morphl_community_edition_spark.session import artifact
 
-    path = _per_app_path(spark, SF_DIR, "morphl_zorder_orders")
+    path = artifact(spark, "morphl_zorder_orders", SF_DIR)
     touched = (
         spark.read.parquet(path)
         .filter(F.col("zbucket").isin(
@@ -1566,15 +1571,6 @@ def test_pinned_order_pins_child_and_preserves_result(spark):
     want = [tuple(r) for r in df.orderBy("l_suppkey").collect()]
     got = [tuple(r) for r in pinned.collect()]
     assert got == want
-    # the measurement escape must reproduce the plain plan exactly
-    hints.PIN_UNBOUNDED_SORT = False
-    try:
-        plain = hints.pinned_order(df, "l_suppkey")
-        assert getattr(plain, "_morphl_pre_pin", None) is None
-        pplan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" not in pplan
-    finally:
-        hints.PIN_UNBOUNDED_SORT = True
 
 
 def test_q175_retraction_serves_from_histogram(spark):
